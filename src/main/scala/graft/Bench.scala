@@ -445,8 +445,8 @@ object Bench {
       // exception lands mid-phase (normal path frees it in the same
       // finally; the PID-stamped sweep covers SIGKILL/OOM)
       val earlyCleanup = new Thread(() => {
-        graft.tools.StageBench.deleteRec(new java.io.File(earlyDir).getParentFile)
-        earlyLocalRoot.foreach(d => graft.tools.StageBench.deleteRec(new java.io.File(d)))
+        graft.tools.Scratch.deleteRec(new java.io.File(earlyDir).getParentFile)
+        earlyLocalRoot.foreach(d => graft.tools.Scratch.deleteRec(new java.io.File(d)))
       })
       Runtime.getRuntime.addShutdownHook(earlyCleanup)
       try {
@@ -519,8 +519,8 @@ object Bench {
     // normal exit deletes scratch below; the hook covers SIGTERM/exceptions
     // (SIGKILL/OOM is covered by the next run's sweep via the PID stamp)
     sys.addShutdownHook {
-      graft.tools.StageBench.deleteRec(new java.io.File(inputDir).getParentFile)
-      legLocalRoot.foreach(d => graft.tools.StageBench.deleteRec(new java.io.File(d)))
+      graft.tools.Scratch.deleteRec(new java.io.File(inputDir).getParentFile)
+      legLocalRoot.foreach(d => graft.tools.Scratch.deleteRec(new java.io.File(d)))
     }
 
     // in-process fallback (no taskset / child spawn failure): warm this JVM
@@ -612,9 +612,9 @@ object Bench {
       if (bestCpu(level, early = false) >= 0.97 * before) futile += 1 else futile = 0
     }
 
-    graft.tools.StageBench.deleteRec(
+    graft.tools.Scratch.deleteRec(
       new java.io.File(inputDir).getParentFile) // ~25 KB/clip of temp input
-    legLocalRoot.foreach(d => graft.tools.StageBench.deleteRec(new java.io.File(d)))
+    legLocalRoot.foreach(d => graft.tools.Scratch.deleteRec(new java.io.File(d)))
 
     // final (non-partial) write + print
     phase = "done"

@@ -29,7 +29,9 @@ final case class GraftConf(
     // substring pass: seed-window width in tokens
     substringWindow: Int = 10,
     // skew: max bucket size before the chain-pair fallback (SURVEY §7.4).
-    // Buckets above this emit O(s) chain pairs instead of O(s²). True dup
+    // Buckets above this stream O(s) chain pairs instead of O(s²), in
+    // O(bucketCap + chainWidth) memory per group and with output that does
+    // not depend on shuffle order (see CandidatePairs). True dup
     // groups are small (≤7 variants in the fixture; bounded in any real
     // corpus), while common-phrase band collisions grow ∝ corpus size —
     // measured at 800k clips, buckets of 17–128 members (the Zipf tail of
@@ -39,34 +41,21 @@ final case class GraftConf(
     // StdHashIndex.h:159-183). 16 keeps every true group (≤7 variants)
     // on the exact path and pushes collision buckets onto the linear
     // chain path — the asymptotic regime any fixed cap reaches at scale.
+    // Recall limit of a capped substring-window group: its seed probes
+    // reach only its first bucketCap documents in id order (SuffixDups).
     bucketCap: Int = 16,
+    // chain pairs per member of a capped group: each pairs with the
+    // previous chainWidth members in id order
     chainWidth: Int = 2,
-    // absolute per-group buffer bound for the pair generator: members up to
-    // this count are buffered (sorted, deterministic chain); members BEYOND
-    // it are chain-paired in a bounded-memory streaming pass (arrival
-    // order) bridged to the buffered chain — connected, never dropped,
-    // flagged `capped`. See CandidatePairs for the determinism caveat.
-    bucketHardStop: Int = 4 * 1000 * 1000,
     // connected components
     maxCcIterations: Int = 50,
     // checkpointing
-    checkpointDir: Option[String] = None,
-    // Shuffle diet: band/candidate stages shuffle Long SURROGATE ids
-    // (xxhash64 of clip_id) instead of the id strings; strings are restored
-    // inside the verify join (which carries them anyway), so accepted edges
-    // and the CC loop keep native string labels (Components' collision-free
-    // labeling argument is untouched). Surrogate collisions only ever ADD
-    // candidate pairs, which exact verification rejects — except a 2^-64
-    // same-pair collision (a dup pair whose two members hash equal is
-    // dropped by the a<b predicate), the same accepted probability class as
-    // the CC fingerprint early-stop. See DedupPipeline.
-    surrogateIds: Boolean = false
+    checkpointDir: Option[String] = None
 ) {
   def textNumPerm: Int = textBands * textRows
   def audioNumPerm: Int = audioBands * audioRows
   require(simhashBits % simhashBands == 0, "simhash bands must divide bits")
-  require(bucketHardStop > bucketCap && bucketHardStop >= 2,
-    "bucketHardStop must exceed bucketCap")
+  require(bucketCap >= 0, "bucketCap must be non-negative")
   require(chainWidth >= 1, "chainWidth must be positive")
   def simhashBandBits: Int = simhashBits / simhashBands
 }

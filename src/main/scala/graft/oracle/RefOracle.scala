@@ -95,7 +95,7 @@ object RefOracle {
       val tj = Shingles.jaccardSorted(textSh(i), textSh(j))
       lazy val aj = Shingles.jaccardSorted(audioSh(i), audioSh(j))
       lazy val sub = isTokenSubstring(texts(i), texts(j)) || isTokenSubstring(texts(j), texts(i))
-      tj >= c.textJaccardThreshold ||
+      (textSh(i).nonEmpty && textSh(j).nonEmpty && tj >= c.textJaccardThreshold) ||
         (audioSh(i).nonEmpty && audioSh(j).nonEmpty && aj >= c.audioJaccardThreshold) ||
         sub
     }.toSet

@@ -1,153 +1,115 @@
 package graft.pipeline
 
 import graft.conf.GraftConf
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.types.{LongType, StringType}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.lit
 
-import scala.collection.mutable.ArrayBuffer
-import scala.reflect.ClassTag
+import scala.collection.mutable
 
-/** Band shuffle → candidate pairs (reference operators B1/B2 + Q4).
+/** Band shuffle → candidate pairs (reference operators B1/B2 + Q4), and the
+  * one bucket-pair generator both candidate streams share.
   *
   * The reference materializes per-table hash buckets (CSR scatter,
-  * `/root/reference/hashIndex/StdHashIndex.h:31-74`) and probes them per
+  * `hashIndex/StdHashIndex.h:31-74`) and probes them per
   * query; for all-pairs dedup the bucket directory is never materialized —
-  * the `groupByKey(band_key)` shuffle IS the hash table, and each group
-  * emits its member pairs directly (SURVEY §2.4/§7.4). Band keys are
-  * family-salted upstream, so the group key is a single primitive Long;
-  * family provenance travels as the `src` bit ([[Signatures.SrcText]] etc.)
-  * and pairs aggregate it with `bit_or`.
-  *
-  * Ids are generic over the member-id type: the pipeline shuffles Long
-  * SURROGATE ids (xxhash64 of the clip_id — see [[DedupPipeline]]'s diet
-  * note) while standalone callers (HashBooster, PairStats, specs) keep
-  * native String ids; the pair semantics (sorted-distinct members, chain
-  * order) follow the id type's ordering either way.
+  * the `(key, src)` group shuffle IS the hash table, and each group emits its
+  * member pairs directly (SURVEY §2.4/§7.4). Band keys are family-salted
+  * upstream and `src` ([[Signatures.SrcText]] etc.) is part of the group
+  * key, so every group holds exactly one family and a pair's `sources` is
+  * the exact family bit that bucketed it; the caller's `bit_or` merges
+  * families across groups.
   *
   * Skew (the 10^12-scale hazard the single-node reference never faced): a
   * bucket of size s emits O(s²) pairs; a hot key (e.g. empty-transcript
-  * signature) would explode. Buckets over `bucketCap` fall back to
-  * chain-pairing over id-sorted members (each member paired with its next
-  * `chainWidth` neighbors): O(s) pairs that keep the bucket connected, which
-  * preserves CLUSTER correctness for true duplicate groups (dup relations
-  * within a bucket of true dups are transitive through verification) while
-  * bounding blowup. Capped buckets are flagged (`capped`), never silently
-  * dropped, and surface in stage lineage.
+  * signature) would explode. Members arrive sorted by `clip_id` (equal
+  * neighbours merged), and at most `bucketCap + 1` of them are buffered:
   *
-  * Memory bound: a single task must not buffer a pathological bucket's ids
-  * without limit, so at most `bucketHardStop` members are buffered (sorted,
-  * deterministic chain); members beyond that are chain-paired in a
-  * STREAMING pass — each overflow member pairs with the previous
-  * `chainWidth` members in arrival order, bridged to the tail of the sorted
-  * chain, O(chainWidth) memory. Nothing is dropped and the bucket stays
-  * connected; the trade, documented: overflow pairs depend on shuffle
-  * arrival order, so output for groups above `bucketHardStop` (4M default —
-  * never reached by real band buckets, which `bucketCap` already chains) is
-  * connected-but-nondeterministic rather than silently truncated.
+  *  - a group that ends with ≤ `bucketCap` members emits every pair with at
+  *    least one flagged member (band rows are all flagged: all pairs);
+  *  - a larger group streams: each member pairs with the previous
+  *    `chainWidth` members (O(s) pairs that keep the bucket connected,
+  *    which preserves cluster correctness for true duplicate runs), and the
+  *    first `probeLimit` flagged members also pair with the first
+  *    `bucketCap` members, still buffered. Its pairs are flagged `capped`.
+  *
+  * Memory is O(`bucketCap` + `chainWidth`) per group at any group size, and
+  * the output depends only on the group's member set — never on shuffle
+  * arrival order or partitioning. Recall limit, documented: in a capped
+  * group, a flagged member's partners beyond the chain and the first
+  * `bucketCap` members are not emitted (the reference's own bucket scans
+  * are likewise truncated at the retrieval budget, StdHashIndex.h:159-183).
   */
 object CandidatePairs {
 
-  /** bands: (band_key: Long, src: Int, clip_id: String | Long) →
-    * RAW pair stream (a, b, sources: Int bitmask, capped) with a < b; NOT
-    * deduplicated across buckets — the caller's final groupBy(a, b)
-    * (DedupPipeline's candidates stage) is the single dedup shuffle for all
-    * candidate streams. The id column's type picks the specialization.
-    *
-    * Provenance caveat (documented approximation — ACCEPTED EDGES are
-    * unaffected, verification is exact): `sources` is the OR of every
-    * member row's family bit in the bucket, applied to all its pairs, and
-    * family-salted Long keys can collide across families (birthday-likely
-    * at 10^12 rows) — so a pair's `sources` bitmask may include a family
-    * that never banded that specific pair. Treat it as diagnostic lineage,
-    * not exact attribution. */
-  def fromBands(spark: SparkSession, bands: DataFrame, conf: GraftConf): DataFrame = {
-    import spark.implicits._
-    bands.schema("clip_id").dataType match {
-      case StringType =>
-        fromBandsTyped[String](bands.select($"band_key", $"src", $"clip_id")
-          .as[(Long, Int, String)], conf)
-      case LongType =>
-        fromBandsTyped[Long](bands.select($"band_key", $"src", $"clip_id")
-          .as[(Long, Int, Long)], conf)
-      case other => throw new IllegalArgumentException(s"clip_id type: $other")
-    }
-  }
+  /** bands: (band_key: Long, src: Int, clip_id: String) → RAW pair stream
+    * (a, b, sources: Int bitmask, capped) with a < b; NOT deduplicated
+    * across buckets — the caller's final groupBy(a, b) (DedupPipeline's
+    * candidates stage) is the single dedup shuffle for all candidate
+    * streams. */
+  def fromBands(spark: SparkSession, bands: DataFrame, conf: GraftConf): DataFrame =
+    bucketPairs(spark, bands.select(bands("band_key").as("key"), bands("src"),
+      bands("clip_id"), lit(true).as("flagged")), conf, probeLimit = 0)
 
-  private def fromBandsTyped[T: Ordering: ClassTag](
-      bands: Dataset[(Long, Int, T)], conf: GraftConf)(
-      implicit keyEnc: org.apache.spark.sql.Encoder[Long],
-      pairEnc: org.apache.spark.sql.Encoder[(T, T, Int, Boolean)]): DataFrame = {
-    val ord = implicitly[Ordering[T]]
-    import ord.mkOrderingOps
+  /** members (key: Long, src: Int, clip_id: String, flagged: Boolean),
+    * grouped on (key, src) → raw pairs (a, b, sources = src, capped) by the
+    * rule in the class doc. */
+  private[pipeline] def bucketPairs(spark: SparkSession, members: DataFrame,
+      conf: GraftConf, probeLimit: Int): DataFrame = {
+    import spark.implicits._
     val cap = conf.bucketCap
     val width = conf.chainWidth
-    val hardStop = conf.bucketHardStop
-    bands
-      .groupByKey(_._1)
-      .flatMapGroups { (_: Long, rows: Iterator[(Long, Int, T)]) =>
-        val ids = new ArrayBuffer[T]()
-        var src = 0
-        while (rows.hasNext && ids.length < hardStop) {
-          val r = rows.next()
-          ids += r._3
-          src |= r._2
-        }
-        if (ids.length < 2) Iterator.empty // hardStop ≥ 2 ⇒ group exhausted
-        else {
-          val sorted = ids.distinct.sorted
-          val head: Iterator[(T, T, Int, Boolean)] =
-            if (sorted.length < 2) Iterator.empty
-            else if (sorted.length <= cap) {
-              for {
-                i <- sorted.indices.iterator
-                j <- (i + 1) until sorted.length
-              } yield (sorted(i), sorted(j), src, false)
-            } else {
-              for {
-                i <- sorted.indices.iterator
-                d <- (1 to width).iterator
-                if i + d < sorted.length
-              } yield (sorted(i), sorted(i + d), src, true)
-            }
-          val tail: Iterator[(T, T, Int, Boolean)] =
-            if (!rows.hasNext) Iterator.empty
-            else {
-              // streaming overflow chain (see class doc): ring buffer of the
-              // last `width` members, seeded from the sorted chain's tail so
-              // overflow members stay connected to the buffered component.
-              // Overflow pairs carry the FROZEN buffered-prefix src — not a
-              // running accumulation, which would make a pair's `sources`
-              // depend on where in the arrival order it was emitted and
-              // diverge from the head pairs' view of the same bucket. The
-              // per-pair mask stays diagnostic either way (class doc);
-              // freezing just removes one gratuitous nondeterminism axis.
-              val overflowSrc = src
-              val window = new Array[T](width)
-              var filled = 0
-              var pos = 0
-              def push(x: T): Unit = {
-                window(pos) = x
-                pos = (pos + 1) % width
-                if (filled < width) filled += 1
-              }
-              sorted.takeRight(width).foreach(push)
-              rows.flatMap { r =>
-                val x = r._3
-                val out = new ArrayBuffer[(T, T, Int, Boolean)](filled)
-                var k = 0
-                while (k < filled) {
-                  val w = window(k)
-                  if (w != x)
-                    out += (if (x < w) (x, w, overflowSrc, true) else (w, x, overflowSrc, true))
-                  k += 1
-                }
-                push(x)
-                out.iterator
-              }
-            }
-          head ++ tail
-        }
+    members.select($"key", $"src", $"clip_id", $"flagged")
+      .groupBy($"key", $"src").as[(Long, Int), (Long, Int, String, Boolean)]
+      .flatMapSortedGroups($"clip_id") { (key, rows) =>
+        groupPairs(rows.map(r => (r._3, r._4)), cap, width, probeLimit)
+          .map { case (a, b, capped) => (a, b, key._2, capped) }
       }
       .toDF("a", "b", "sources", "capped")
+  }
+
+  /** One group's pairs (a, b, capped), a < b, each emitted once, from its
+    * (id, flagged) members sorted by id. */
+  private[pipeline] def groupPairs(sorted: Iterator[(String, Boolean)], cap: Int,
+      width: Int, probeLimit: Int): Iterator[(String, String, Boolean)] = {
+    val in = sorted.buffered
+    val members = new Iterator[(String, Boolean)] {
+      def hasNext: Boolean = in.hasNext
+      def next(): (String, Boolean) = {
+        val (id, f) = in.next()
+        var flagged = f
+        while (in.hasNext && in.head._1 == id) flagged |= in.next()._2
+        (id, flagged)
+      }
+    }
+    val head = new mutable.ArrayBuffer[(String, Boolean)](cap + 1)
+    while (members.hasNext && head.length <= cap) head += members.next()
+    if (head.length <= cap) {
+      for {
+        j <- head.indices.iterator
+        i <- (0 until j).iterator
+        if head(i)._2 || head(j)._2
+      } yield (head(i)._1, head(j)._1, false)
+    } else {
+      // member j pairs with the members i < j where i >= j - width (chain),
+      // or i < cap and either j probes or both sit in the prefix and i probes
+      val probing = new Array[Boolean](cap)
+      var probes = 0
+      var j = -1L
+      val recent = mutable.ArrayDeque.empty[(Long, String)] // positions j-width until j
+      (head.iterator ++ members).flatMap { case (id, flagged) =>
+        j += 1
+        val probe = flagged && probes < probeLimit
+        if (probe) probes += 1
+        if (j < cap) probing(j.toInt) = probe
+        val prefixEnd = if (probe || j < cap) math.min(j, cap.toLong).toInt else 0
+        val out = mutable.ArrayBuffer.empty[(String, String, Boolean)]
+        for (i <- 0 until prefixEnd if probe || probing(i) || i >= j - width)
+          out += ((head(i)._1, id, true))
+        for ((i, r) <- recent if i >= prefixEnd) out += ((r, id, true))
+        recent.append((j, id))
+        if (recent.length > width) recent.removeHead()
+        out
+      }
+    }
   }
 }

@@ -49,8 +49,7 @@ import org.apache.spark.storage.StorageLevel
   *    join costs more than it saves; it is restored afterwards.
   *
   * Labels are the `clip_id` strings themselves (min = lexicographic), which
-  * avoids 64-bit surrogate-id birthday collisions at 10^12 rows and keeps
-  * resume byte-identical.
+  * keeps labels collision-free and resume byte-identical.
   */
 object Components {
 

@@ -42,7 +42,7 @@ object Scratch {
       .filter(d => d.isDirectory && prefixes.exists(d.getName.startsWith) && !ownerAlive(d))
     stale.foreach { d =>
       System.err.println(s"[scratch] sweeping stale $d (owner dead)")
-      StageBench.deleteRec(d)
+      deleteRec(d)
     }
     stale.length
   }
@@ -52,6 +52,13 @@ object Scratch {
     val shm = new File("/dev/shm")
     if (shm.isDirectory && shm.canWrite) sweepStale(shm)
     sweepStale(new File(System.getProperty("java.io.tmpdir", "/tmp")))
+    ()
+  }
+
+  /** Delete `f` and, for a directory, everything under it. */
+  def deleteRec(f: File): Unit = {
+    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRec))
+    f.delete()
     ()
   }
 }

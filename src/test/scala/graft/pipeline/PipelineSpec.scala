@@ -127,59 +127,72 @@ class PipelineSpec extends AnyFunSuite {
     assert(capped >= 119, "chain must keep the bucket connected")
   }
 
-  test("bucket overflow beyond bucketHardStop is chain-bridged, never silently dropped") {
-    // group of 40 on one band key with a tiny configured hardStop of 8:
-    // members beyond the 8th take the streaming overflow path and must all
-    // (a) appear in pairs, (b) stay connected to the buffered chain,
-    // (c) stay in the linear pair regime, (d) be flagged capped.
-    val c = conf.copy(bucketCap = 4, chainWidth = 2, bucketHardStop = 8)
-    val n = 40
-    val ids = (0 until n).map(i => f"m$i%03d")
-    val bands = ids.map(id => (99L, 1, id)).toDF("band_key", "src", "clip_id")
-    val rows = CandidatePairs.fromBands(spark, bands, c)
-      .select("a", "b", "capped").as[(String, String, Boolean)].collect()
-    assert(rows.forall(_._3), "every pair of an overflowed group must be flagged capped")
+  // pair-set checks shared by the capped-group specs: every member appears,
+  // the group stays one component, and every pair is flagged capped
+  private def assertCappedGroup(rows: Seq[(String, String, Int, Boolean)], ids: Seq[String]): Unit = {
+    assert(rows.forall(_._4), "every pair of a capped group must be flagged capped")
     assert(rows.forall(r => r._1 < r._2), "pairs must be endpoint-ordered")
-    val pairs = rows.map(r => (r._1, r._2)).toSet
-    assert(pairs.flatMap(p => Set(p._1, p._2)) === ids.toSet,
-      "every member (incl. overflow) must appear in at least one pair")
-    // connectivity via local union-find
+    val pairs = rows.map(r => (r._1, r._2))
+    assert(pairs.distinct.size === pairs.size, "a group emits each pair once")
+    assert(pairs.flatMap(p => Seq(p._1, p._2)).toSet === ids.toSet,
+      "every member must appear in at least one pair")
     val parent = scala.collection.mutable.Map(ids.map(i => i -> i): _*)
     def find(x: String): String = { var r = x; while (parent(r) != r) r = parent(r); r }
     pairs.foreach { case (a, b) => parent(find(a)) = find(b) }
-    assert(ids.map(find).toSet.size === 1, "overflowed group must remain one component")
-    // linear regime, not O(n²)
-    assert(pairs.size <= n * 2 * c.chainWidth, s"pair count ${pairs.size} not linear")
+    assert(ids.map(find).toSet.size === 1, "a capped group must remain one component")
   }
 
-  test("suffix-pass window group beyond bucketHardStop streams bounded, connected, flagged") {
-    // one boilerplate W-token window shared by 40 docs with a tiny
-    // configured hardStop of 8: the generator must buffer at most 8
-    // members and stream the other 32 through the ring-buffer chain —
-    // (a) every member appears in pairs, (b) the group stays one
-    // component, (c) the pair count stays in the linear regime,
-    // (d) every pair is flagged capped. (Before this path existed, the
-    // generator buffered the WHOLE group per task — the 10^12-row OOM.)
+  private def pairRows(df: org.apache.spark.sql.DataFrame): Seq[(String, String, Int, Boolean)] =
+    df.select("a", "b", "sources", "capped").as[(String, String, Int, Boolean)]
+      .collect().toSeq.sorted
+
+  test("capped band bucket streams a bounded deterministic chain") {
+    // 40 members on one band key at bucketCap 4: the generator buffers at
+    // most 5 of them and streams the rest as a width-2 chain
+    val c = conf.copy(bucketCap = 4, chainWidth = 2)
+    val n = 40
+    val ids = (0 until n).map(i => f"m$i%03d")
+    def bands(order: Seq[String], parts: Int) =
+      order.map(id => (99L, Signatures.SrcText, id)).toDF("band_key", "src", "clip_id").repartition(parts)
+    val rows = pairRows(CandidatePairs.fromBands(spark, bands(ids, 7), c))
+    assertCappedGroup(rows, ids)
+    assert(rows.size <= n * c.chainWidth, s"pair count ${rows.size} not linear")
+    assert(pairRows(CandidatePairs.fromBands(spark, bands(ids.reverse, 3), c)) === rows,
+      "output must not depend on input order or partitioning")
+  }
+
+  test("capped window group streams bounded, connected, flagged") {
+    // one boilerplate W-token window shared by 40 docs at bucketCap 4: a
+    // chain over all 40 plus the seed probes against the first 4 docs
     val w = conf.substringWindow
     val common = (1 to w).map(i => s"b$i").mkString(" ")
     val n = 40
     val ids = (0 until n).map(i => f"s$i%03d")
-    val clips = ids.map(id => (id, common)).toDF("clip_id", "transcript")
-    val c = conf.copy(bucketCap = 4, chainWidth = 2, bucketHardStop = 8)
-    val rows = SuffixDups.candidates(spark, clips, c)
-      .select("a", "b", "capped").as[(String, String, Boolean)].collect()
-    assert(rows.forall(_._3), "every pair of an overflowed window group must be flagged capped")
-    assert(rows.forall(r => r._1 < r._2), "pairs must be endpoint-ordered")
-    val pairs = rows.map(r => (r._1, r._2)).toSet
-    assert(pairs.flatMap(p => Set(p._1, p._2)) === ids.toSet,
-      "every member (incl. overflow) must appear in at least one pair")
-    val parent = scala.collection.mutable.Map(ids.map(i => i -> i): _*)
-    def find(x: String): String = { var r = x; while (parent(r) != r) r = parent(r); r }
-    pairs.foreach { case (a, b) => parent(find(a)) = find(b) }
-    assert(ids.map(find).toSet.size === 1, "overflowed window group must remain one component")
+    def clips(order: Seq[String], parts: Int) =
+      order.map(id => (id, common)).toDF("clip_id", "transcript").repartition(parts)
+    val c = conf.copy(bucketCap = 4, chainWidth = 2)
+    val rows = pairRows(SuffixDups.candidates(spark, clips(ids, 7), c))
+    assertCappedGroup(rows, ids)
     // linear regime: chain O(n·width) + seed probes O(SeedProbeLimit·cap)
-    assert(pairs.size <= n * 2 * c.chainWidth + SuffixDups.SeedProbeLimit * c.bucketCap,
-      s"pair count ${pairs.size} not in the bounded regime")
+    assert(rows.size <= n * c.chainWidth + SuffixDups.SeedProbeLimit * c.bucketCap,
+      s"pair count ${rows.size} not in the bounded regime")
+    assert(pairRows(SuffixDups.candidates(spark, clips(ids.reverse, 3), c)) === rows,
+      "output must not depend on input order or partitioning")
+  }
+
+  test("band pair sources are the group's single family bit") {
+    // one band_key value carrying rows of two families: each family is its
+    // own bucket, so no pair crosses families or carries the other's bit
+    val text = Seq("t1", "t2", "t3", "x")
+    val audio = Seq("a1", "a2", "x")
+    val bands = (text.map(id => (5L, Signatures.SrcText, id)) ++
+      audio.map(id => (5L, Signatures.SrcAudio, id))).toDF("band_key", "src", "clip_id")
+    val rows = pairRows(CandidatePairs.fromBands(spark, bands, conf))
+    def pairsOf(ids: Seq[String]) =
+      for (i <- ids.indices; j <- (i + 1) until ids.length) yield (ids(i), ids(j))
+    val want = pairsOf(text.sorted).map(p => (p._1, p._2, Signatures.SrcText, false)) ++
+      pairsOf(audio.sorted).map(p => (p._1, p._2, Signatures.SrcAudio, false))
+    assert(rows === want.sorted)
   }
 
   test("capped hot-phrase group still finds containment pairs beyond the chain width") {
@@ -237,23 +250,14 @@ class PipelineSpec extends AnyFunSuite {
     assert(r3.stages.forall(!_.resumed))
   }
 
-  test("surrogate-id shuffle diet reproduces identical edges and clusters") {
-    // Long xxhash64 surrogates ride the band/candidate shuffles; strings
-    // are restored in the verify join — accepted edge set and clusters
-    // must be IDENTICAL to the string-id path (collisions could only add
-    // verify-rejected candidates, and none exist at this scale)
-    val base = DedupPipeline.run(spark, clipsDf, conf)
-    val diet = DedupPipeline.run(spark, clipsDf, conf.copy(surrogateIds = true))
-    def edgeSet(r: DedupPipeline.Result): Set[(String, String)] =
-      r.edges.filter(col("accepted")).select("a", "b")
-        .as[(String, String)].collect().toSet
-    def clusterMap(r: DedupPipeline.Result): Map[String, String] =
-      r.clusters.as[(String, String)].collect().toMap
-    val (be, de) = (edgeSet(base), edgeSet(diet))
-    assert(de === be)
-    // restored pairs stay canonically ordered on the STRING ids
-    de.foreach { case (a, b) => assert(a < b, s"($a,$b)") }
-    assert(clusterMap(diet) === clusterMap(base))
-    base.cleanup(); diet.cleanup()
+  test("two empty transcripts with unrelated audio stay apart") {
+    // empty transcripts collide on every text band, but two empty shingle
+    // sets are not identical text: only the (unrelated) audio may link them
+    val a = ClipTableGen.group(conf.seed, 3L).head.copy(clip_id = "empty-a", transcript = "")
+    val b = ClipTableGen.group(conf.seed, 4L).head.copy(clip_id = "empty-b", transcript = "")
+    val res = DedupPipeline.run(spark, Seq(a, b).toDF(), conf)
+    val got = res.clusters.as[(String, String)].collect().toMap
+    assert(got("empty-a") !== got("empty-b"), s"empty transcripts clustered: $got")
+    res.cleanup()
   }
 }
