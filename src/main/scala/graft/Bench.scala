@@ -31,23 +31,18 @@ import org.apache.spark.sql.SparkSession
   * full-protocol run, 800k clips; BASELINE.md §3) embedded verbatim. The
   * compact line references that run by filename + a 3-field summary.
   *
-  * Phases (most valuable first within the budget):
+  * One protocol, most valuable first within the budget:
   *  1. headline driver queries at `local[SPARK_GRAFT_CPUS]` on
   *     `SPARK_GRAFT_SF_DIR` (per-query seconds in "queries"; a failing
   *     query records an entry in "errors" instead of being swallowed);
-  *  1.5 an EARLY scaling pair at the smallest honest input (150k clips):
-  *     one pinned (N, 4N) pair lands a measured scaling_efficiency on the
-  *     record ~5 min from JVM start — inside even round 3's ~6-7 min kill
-  *     window — labeled `"early":true` + its own n_clips, superseded in
-  *     dedup_scaling by the first full-size pair (raw_runs keeps every
-  *     leg, each tagged with its input size);
   *  2. the end-to-end dedup pipeline (synth input_hint table → clusters) at
   *     two parallelism levels on IDENTICAL input — the sandbox evidence for
   *     the north rule's N vs 4N executor-cluster scaling criterion. Each
   *     leg is a child JVM PINNED to exactly N physical cores (taskset), so
   *     "N cores" means N cores — see [[graft.tools.BenchLeg]]. Reports
   *     clips/sec at both plus efficiency = (T_N / T_4N) / 4; target ≥ 0.8
-  *     (BASELINE.md §2).
+  *     (BASELINE.md §2). A leg whose child fails is logged and left out;
+  *  3. the CPU-parity retry described below.
   *
   * Measurement hygiene on this SHARED host (BASELINE.md §3):
   * GRAFT_BENCH_REPS interleaved (N, 4N) leg pairs with best-of per level,
@@ -73,22 +68,6 @@ object Bench {
     "q_simhash_pairs", "q_substring_pairs", "q_knn_cosine", "q_ann_buckets",
     "q_ann_hamming_knn", "q_ann_forest_knn",
     "q1_agg", "q_join_agg", "q_window_latest")
-
-  private def session(cores: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-bench-$cores")
-      .config("spark.sql.shuffle.partitions", (2 * cores).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      // variable-duration clips (0.2–2.0 s) skew split runtimes; finer
-      // splits keep the stage tail short at higher parallelism
-      .config("spark.sql.files.maxPartitionBytes", (32 * 1024 * 1024).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 
   /** RAM-backed scratch root for the scaling legs, when the sandbox has
     * one. A real N-executor cluster reads its input from a distributed
@@ -251,20 +230,16 @@ object Bench {
 
     val qErrors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val qTimes = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-    // completed scaling legs — each carries its own input size AND an
-    // explicit early flag (the EARLY pair runs smaller and under a weaker
-    // protocol than the main pairs; a quotient must never mix phases, even
-    // if budget resizing makes the two input sizes coincide)
-    val times = scala.collection.mutable.ArrayBuffer.empty[BenchReport.Leg]
+    val times = scala.collection.mutable.ArrayBuffer.empty[BenchReport.Leg] // completed scaling legs
     var nClips = nReq
-    var earlyN = 0 // early-pair input size, 0 = none ran
     var scalingSkipped: Option[String] = None
+    var pairsDone = 0
     var extraPairs = 0
-    var heapPerCoreGb = 3
+    val heapPerCoreGb = sys.env.getOrElse("GRAFT_BENCH_HEAP_PER_CORE_GB", "3").toInt
     var scratchKind = "disk"
     var phase = "startup"
 
-    def bestCpu(c: Int, early: Boolean): Double = BenchReport.bestCpu(times.toSeq, c, early)
+    def bestCpu(c: Int): Double = BenchReport.bestCpu(times.toSeq, c)
 
     /** Snapshot the mutable run state for the renderers. */
     def state(partial: Boolean): BenchReport.State = BenchReport.State(
@@ -273,18 +248,13 @@ object Bench {
       legs = times.toSeq,
       baseN = baseN,
       mainClips = nClips,
-      earlyClips = earlyN,
       scalingSkipped = scalingSkipped,
       extraPairs = extraPairs,
       heapPerCoreGb = heapPerCoreGb,
       scratchKind = scratchKind,
       sfDir = sfDir,
       meta = BenchReport.Meta(startedUtc, elapsed, budgetSec, phase, nReq, nClips,
-        earlyN, reps, pairsDone = times.count(!_.early) / 2,
-        // "+indexdir" marks runs exercising CodesCache's production parquet
-        // spill path (GRAFT_INDEX_DIR) instead of localCheckpoint blocks
-        protocol = "r5-compact" +
-          (if (sys.env.contains("GRAFT_INDEX_DIR")) "+indexdir" else "")),
+        reps, pairsDone, BenchReport.protocol(indexDir = sys.env.contains("GRAFT_INDEX_DIR"))),
       committedSource =
         fullRun.map(_ => sys.env.getOrElse("GRAFT_BENCH_FULL_JSON", "BENCH_FULL.json")),
       committedJson = fullRun,
@@ -295,7 +265,7 @@ object Bench {
       * driver parses a 2000-char stdout tail) to stdout, remember it for
       * the SIGTERM hook. Called at every milestone: a kill at any point
       * leaves the latest state as the last parseable stdout line. */
-    def emit(partial: Boolean): String = {
+    def emit(partial: Boolean): Unit = {
       val st = state(partial)
       val full = BenchReport.renderFull(st)
       try java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), full + "\n")
@@ -305,13 +275,12 @@ object Bench {
       if (!partial) deliveredFinal = true
       println(json)
       System.out.flush()
-      json
     }
 
     // ---- phase 1: headline queries --------------------------------------
     phase = "headline"
     emit(partial = true) // v0: metadata + committed run, parseable immediately
-    val spark1 = session(cpus)
+    val spark1 = BenchLeg.session(cpus, 2 * cpus)
     // untimed session warmup so the first timed query doesn't absorb
     // executor init + codegen compilation
     try SparkEntry.queries("q1_agg")(spark1, sfDir).count()
@@ -331,162 +300,11 @@ object Bench {
       }
     }
 
-    // ---- scaling-leg machinery (shared by the early and main pairs) -----
+    // ---- phase 2: same job, same input, two parallelism levels ----------
     def scalingCost(n: Int): Double =
       n * secPerClipSynth + n * (secPerClip2c + secPerClip8c) + pairOverheadSec
-    // below this the per-job floor dominates the quotient (env override is
-    // a smoke-test knob, not a measurement protocol)
-    val minClips = sys.env.getOrElse("GRAFT_BENCH_MIN_CLIPS", "150000").toInt
-
-    // Each leg runs as a CHILD JVM pinned with `taskset -c 0..N-1` to
-    // exactly N physical cores. A floating `local[N]` JVM is NOT an N-core
-    // cluster: shuffle/IO/GC threads borrow idle host cores beside the N
-    // task slots (measured process utilization 2.38 at local[2] on a quiet
-    // host), overstating small-leg throughput and understating the scaling
-    // quotient — the quieter the host, the worse the recorded number.
-    // Pinning bounds the whole process, and the JVM sizes its thread pools
-    // from the affinity mask, so this is the faithful emulation of the
-    // north rule's two CLUSTER SIZES. Both legs run the identical physical
-    // plan (same shuffle-partition count — the plan belongs to the job,
-    // not the cluster size). Each child warms itself on a row-limited
-    // untimed prefix (JIT + codegen); `reps` interleaved (N, 4N) pairs,
-    // best-of per level: interleaving decorrelates an ambient-load burst
-    // from one level, and min is the least-contested estimate.
-    val shufflePartitions = 2 * 4 * baseN
-
-    // per-NODE memory is fixed on a real cluster; aggregate memory scales
-    // with cluster size. Giving both legs the parent's full heap would hand
-    // the small "cluster" 4x the per-core memory of the big one — so each
-    // child's heap is heapPerCoreGb * cores (and the JVM sizes GC from the
-    // affinity mask, so GC parallelism scales with the leg too).
-    heapPerCoreGb = sys.env.getOrElse("GRAFT_BENCH_HEAP_PER_CORE_GB", "3").toInt
-    def pinnedLeg(cores: Int, dir: String, localRoot: Option[String],
-        warmRows: Int): Option[(Double, Double)] = {
-      import scala.jdk.CollectionConverters._
-      val javaBin = System.getProperty("java.home") + "/bin/java"
-      val cp = System.getProperty("java.class.path")
-      val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
-        .getInputArguments.asScala.toSeq
-        .filterNot(a => a.startsWith("-agentlib") || a.startsWith("-Xrunjdwp") ||
-          a.startsWith("-Xmx") || a.startsWith("-Xms"))
-      val cmd = Seq("taskset", "-c", s"0-${cores - 1}", javaBin) ++ jvmArgs ++
-        Seq(s"-Xmx${heapPerCoreGb * cores}g", "-cp", cp, "graft.tools.BenchLeg",
-          cores.toString, dir, shufflePartitions.toString, warmRows.toString)
-      try {
-        val pb = new ProcessBuilder(cmd: _*)
-        localRoot.foreach(d => pb.environment().put("GRAFT_LEG_LOCAL_DIR", d))
-        pb.redirectError(ProcessBuilder.Redirect.INHERIT)
-        val p = pb.start()
-        val out = new String(p.getInputStream.readAllBytes(), "UTF-8")
-        val rc = p.waitFor()
-        val parsed = "GRAFT_LEG_SECONDS=([0-9.]+)".r.findFirstMatchIn(out).map(_.group(1).toDouble)
-        val cpu = "GRAFT_LEG_CPUSEC=([0-9.]+)".r.findFirstMatchIn(out).map(_.group(1).toDouble)
-        if (rc != 0 || parsed.isEmpty)
-          System.err.println(s"[bench] pinned leg cores=$cores rc=$rc parsed=$parsed")
-        if (rc == 0) parsed.map(t => (t, cpu.getOrElse(Double.NaN))) else None
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] pinned leg spawn failed: $e")
-        None
-      }
-    }
-
-    /** One timed leg on `dir` (n clips): quiet-window wait, pinned child
-      * JVM, optional un-pinned in-process fallback, milestone emit.
-      * `isEarly` tags the leg's phase explicitly — quotients and parity are
-      * keyed on the flag, never on the input size (which budget resizing
-      * can make coincide across phases). */
-    def once(cores: Int, dir: String, localRoot: Option[String], n: Int,
-        maxWait: Int, fallback: Option[() => Unit], warmCap: Int = Int.MaxValue,
-        isEarly: Boolean = false): Unit = {
-      val probe = waitQuiet(maxWait)
-      val warmRows = math.min(math.min(warmCap,
-        sys.env.getOrElse("GRAFT_BENCH_WARMUP_ROWS", "100000").toInt), n / 2)
-      val leg = pinnedLeg(cores, dir, localRoot, warmRows).map { case (t, u) => (t, u, true) }
-        .orElse(fallback.map { warm =>
-          System.err.println(s"[bench] cores=$cores falling back in-process (un-pinned)")
-          warm()
-          val s = BenchLeg.session(cores, shufflePartitions)
-          val t0 = BenchLeg.pipelineSecs(s, dir)
-          s.stop()
-          (t0, Double.NaN, false)
-        })
-      leg match {
-        case Some((t, cpu, pinned)) =>
-          times += BenchReport.Leg(cores, t, probe, cpu, pinned, n, isEarly)
-          emit(partial = true) // milestone: every completed leg updates the artifact
-        case None =>
-          System.err.println(s"[bench] cores=$cores n=$n: leg skipped (no pinned run, no fallback)")
-      }
-    }
-
-    // ---- phase 1.5: EARLY scaling pair -----------------------------------
-    // The driver's external kill window is unknowable from here (round 3's
-    // fired ~6-7 min in — before a full-size pair could possibly land). So
-    // before the main synth, run ONE pinned (N, 4N) pair on the smallest
-    // honest input: a measured scaling efficiency is on the record ~5 min
-    // from JVM start, labeled with its own n_clips + "early":true, and the
-    // main-size pairs supersede it in dedup_scaling the moment both levels
-    // land (raw_runs keeps the early legs, each tagged n_clips). Skipped
-    // when the requested run is itself small (the first main pair IS the
-    // early pair then) or the budget cannot fit the extra pair.
-    phase = "early-pair"
-    if (nReq > 2 * minClips && remaining > scalingCost(minClips) + 60) {
-      earlyN = minClips
-      graft.tools.Scratch.sweepDefaultRoots()
-      val shmE = shmRoot(earlyN)
-      val earlyDir = materializeClips(spark1, earlyN, shmE)
-      val earlyLocalRoot = shmE.map { root =>
-        val d = java.nio.file.Files.createTempDirectory(root.toPath, "graft-bench-local")
-        graft.tools.Scratch.claim(d.toFile)
-        d.toString
-      }
-      scratchKind = if (earlyLocalRoot.isDefined) "tmpfs" else "disk"
-      // tmpfs scratch is host RAM: free it even when a SIGTERM or an
-      // exception lands mid-phase (normal path frees it in the same
-      // finally; the PID-stamped sweep covers SIGKILL/OOM)
-      val earlyCleanup = new Thread(() => {
-        graft.tools.Scratch.deleteRec(new java.io.File(earlyDir).getParentFile)
-        earlyLocalRoot.foreach(d => graft.tools.Scratch.deleteRec(new java.io.File(d)))
-      })
-      Runtime.getRuntime.addShutdownHook(earlyCleanup)
-      try {
-        // short quiet-wait cap: the early pair's whole point is landing
-        // before an unknown kill; the main pairs re-measure under the full
-        // hygiene protocol and replace it
-        val earlyWait = math.min(loadWait, 45)
-        // 30k-row warmup cap: enough input to JIT the hot loops, not the 100k
-        // default (2/3 of the early input untimed would push the early
-        // quotient past the very kill window it exists to beat)
-        Seq(baseN, 4 * baseN).foreach(c =>
-          once(c, earlyDir, earlyLocalRoot, earlyN, earlyWait, fallback = None,
-            warmCap = 30000, isEarly = true))
-        // Cheap single-leg retries when the early pair's own CPU parity says
-        // a storm hit one level (identical work ⇒ CPU parity ≈ the ~1.1
-        // quiet fabric inflation; a storm only ever INFLATES a leg's CPU).
-        // The full hygiene protocol runs only at the main size — but if the
-        // driver's kill lands before the first main pair, the early quotient
-        // IS the recorded one, so don't leave it storm-shaped when ~60 s
-        // fixes it. Gated so the main phase still fits the budget.
-        def earlyParity: Double = bestCpu(4 * baseN, early = true) / bestCpu(baseN, early = true)
-        var earlyRetries = 0
-        while (earlyRetries < 2 && !earlyParity.isNaN &&
-            (earlyParity > 1.25 || earlyParity < 0.8) &&
-            remaining > scalingCost(minClips) + 160) {
-          val level = if (earlyParity > 1.25) 4 * baseN else baseN
-          System.err.println(f"[bench] early-pair CPU parity $earlyParity%.2f — one retry at cores=$level")
-          earlyRetries += 1
-          once(level, earlyDir, earlyLocalRoot, earlyN, earlyWait, fallback = None,
-            warmCap = 30000, isEarly = true)
-        }
-      } finally {
-        // free the early scratch immediately — the main input needs the room
-        earlyCleanup.run()
-        try Runtime.getRuntime.removeShutdownHook(earlyCleanup)
-        catch { case _: IllegalStateException => } // already shutting down
-      }
-    }
-
-    // ---- phase 2: same job, same input, two parallelism levels ----------
+    // below this the per-job floor dominates the quotient
+    val minClips = math.min(nReq, 150000)
     // Size the scaling phase to the remaining budget: prefer the requested
     // n, shrink if the budget cannot fit synth + one pair at it (the
     // per-clip planning constants above are deliberately conservative).
@@ -523,93 +341,112 @@ object Bench {
       legLocalRoot.foreach(d => graft.tools.Scratch.deleteRec(new java.io.File(d)))
     }
 
-    // in-process fallback (no taskset / child spawn failure): warm this JVM
-    // once full-size, then run legs un-pinned as in earlier rounds. Only
-    // the MAIN pairs get the fallback — an early-pair spawn failure just
-    // skips the early leg (the same failure would hit the main legs too,
-    // and their fallback records it machine-visibly via pinned=false).
-    lazy val inProcessWarmed: Unit = {
-      val warm = BenchLeg.session(4 * baseN, shufflePartitions)
-      BenchLeg.pipelineSecs(warm, inputDir)
-      warm.stop()
-    }
-    def runPair(): Unit = Seq(baseN, 4 * baseN).foreach(c =>
-      once(c, inputDir, legLocalRoot, nClips, loadWait, fallback = Some(() => inProcessWarmed)))
+    // Each leg is a CHILD JVM pinned with `taskset -c 0..N-1` to exactly N
+    // physical cores (why: [[graft.tools.BenchLeg]]). Both levels run the
+    // identical physical plan (same shuffle-partition count — the plan
+    // belongs to the job, not the cluster size). `reps` interleaved (N, 4N)
+    // pairs, best-of per level: interleaving decorrelates an ambient-load
+    // burst from one level, and min is the least-contested estimate.
+    val shufflePartitions = 2 * 4 * baseN
+    val warmRows = math.min(sys.env.getOrElse("GRAFT_BENCH_WARMUP_ROWS", "100000").toInt, nClips / 2)
 
-    // measured cost of one MAIN-size pair, for budget gating of later pairs
-    // (seeded from the early pair's measured per-clip rate when it exists,
-    // else from the planning constants, until the first main pair lands)
-    def measuredPairCost: Double = {
-      val byLevel = Seq(baseN, 4 * baseN).map { c =>
-        val v = times.filter(l => l.cores == c && !l.early).map(_.sec)
-        if (v.nonEmpty) v.max
-        else {
-          val e = times.filter(l => l.cores == c && l.early).map(_.sec)
-          if (earlyN > 0 && e.nonEmpty) e.min / earlyN * nClips * 1.25
-          else nClips * (if (c == baseN) secPerClip2c else secPerClip8c)
-        }
+    // per-NODE memory is fixed on a real cluster; aggregate memory scales
+    // with cluster size. Giving both legs the parent's full heap would hand
+    // the small "cluster" 4x the per-core memory of the big one — so each
+    // child's heap is heapPerCoreGb * cores (and the JVM sizes GC from the
+    // affinity mask, so GC parallelism scales with the leg too).
+    def pinnedLeg(cores: Int): Option[(Double, Double)] = {
+      import scala.jdk.CollectionConverters._
+      val javaBin = System.getProperty("java.home") + "/bin/java"
+      val cp = System.getProperty("java.class.path")
+      val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
+        .getInputArguments.asScala.toSeq
+        .filterNot(a => a.startsWith("-agentlib") || a.startsWith("-Xrunjdwp") ||
+          a.startsWith("-Xmx") || a.startsWith("-Xms"))
+      val cmd = Seq("taskset", "-c", s"0-${cores - 1}", javaBin) ++ jvmArgs ++
+        Seq(s"-Xmx${heapPerCoreGb * cores}g", "-cp", cp, "graft.tools.BenchLeg",
+          cores.toString, inputDir, shufflePartitions.toString, warmRows.toString)
+      try {
+        val pb = new ProcessBuilder(cmd: _*)
+        legLocalRoot.foreach(d => pb.environment().put("GRAFT_LEG_LOCAL_DIR", d))
+        pb.redirectError(ProcessBuilder.Redirect.INHERIT)
+        val p = pb.start()
+        val out = new String(p.getInputStream.readAllBytes(), "UTF-8")
+        val rc = p.waitFor()
+        val wall = "GRAFT_LEG_SECONDS=([0-9.]+)".r.findFirstMatchIn(out).map(_.group(1).toDouble)
+        val cpu = "GRAFT_LEG_CPUSEC=([0-9.]+)".r.findFirstMatchIn(out).map(_.group(1).toDouble)
+        val leg = if (rc == 0) wall.zip(cpu) else None
+        if (leg.isEmpty) System.err.println(s"[bench] pinned leg cores=$cores rc=$rc wall=$wall cpu=$cpu")
+        leg
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] pinned leg spawn failed: $e")
+        None
       }
-      byLevel.sum + pairOverheadSec
     }
+
+    /** One timed leg: quiet-window wait, pinned child JVM, milestone emit. */
+    def once(cores: Int): Unit = {
+      val probe = waitQuiet(loadWait)
+      pinnedLeg(cores).foreach { case (t, cpu) =>
+        times += BenchReport.Leg(cores, t, probe, cpu)
+        emit(partial = true) // milestone: every completed leg updates the artifact
+      }
+    }
+
+    def plannedSec(cores: Int): Double =
+      nClips * (if (cores == baseN) secPerClip2c else secPerClip8c)
+    // measured cost of one pair, for budget gating of later pairs (from
+    // the planning constants until the first pair lands)
+    def measuredPairCost: Double = Seq(baseN, 4 * baseN).map { c =>
+      val v = times.filter(_.cores == c).map(_.sec)
+      if (v.nonEmpty) v.max else plannedSec(c)
+    }.sum + pairOverheadSec
 
     phase = "scaling-pairs"
     // a pair's true cost includes up to 2 bounded quiet-window waits
     def pairGate: Double = measuredPairCost * 1.1 + 2.0 * loadWait + 30
-    var pairsDone = 0
     while (pairsDone < reps && (pairsDone == 0 || remaining > pairGate)) {
-      runPair()
+      Seq(baseN, 4 * baseN).foreach(once)
       pairsDone += 1
       if (pairsDone < reps && remaining <= pairGate)
         System.err.println(f"[bench] budget ${remaining}%.0f s: stopping after $pairsDone of $reps pairs")
     }
 
-    // Cross-level storm check: the two levels run IDENTICAL work, so their
-    // best legs' process CPU must agree up to the measured quiet memory-
-    // fabric inflation (8c/2c ≈ 1.1) — co-tenant pressure only ever
-    // INFLATES a leg's CPU. If the best legs disagree beyond 1.25×, the
-    // higher-CPU level's reps all landed in storms (observed: 2 of 3 8-core
-    // legs at cpu 1056/871 core-s vs a quiet 663 in one run); retry rather
-    // than record the host's weather as the job's scaling. The retry is a
-    // SINGLE leg of the contested level, not a full pair: the parity signal
-    // is CPU-based (work-invariant), so the level whose best-leg CPU is
-    // inflated is identified unambiguously, re-running it can only improve
-    // its own min (the other level's best stands untouched — no upward
-    // bias), and a single leg costs ~1/4 of a pair, which is what lets the
-    // retry still fit the budget that remains after the planned pairs (a
-    // full-pair retry was exactly the step the default budget could never
-    // afford once a storm had already slowed the planned legs). Every leg,
-    // extra or not, is published in raw_runs.
+    // Cross-level storm check (see the header): identical work must cost
+    // ~equal process CPU at both levels, and co-tenant pressure only ever
+    // INFLATES a leg's CPU (observed: 2 of 3 8-core legs at 1056/871
+    // core-s vs a quiet 663 in one run). On disagreement beyond 1.25× the
+    // inflated level is re-run as SINGLE legs: that can only improve its
+    // own min, leaves the other level's best untouched (no upward bias),
+    // and costs ~1/4 of a pair, so it still fits the remaining budget.
     phase = "parity-retry"
-    // parity is judged on the MAIN-size legs only (identical work); the
-    // early pair is superseded by then and never retried
     val maxExtraLegs = 2 * sys.env.getOrElse("GRAFT_BENCH_EXTRA_PAIRS", "2").toInt
-    def parityRatio: Double = bestCpu(4 * baseN, early = false) / bestCpu(baseN, early = false)
+    def parityRatio: Double = bestCpu(4 * baseN) / bestCpu(baseN)
     def cpuAgree: Boolean = {
       val r = parityRatio
       r.isNaN || (r < 1.25 && r > 0.8)
     }
     def contestedLevel: Int = if (parityRatio > 1.25) 4 * baseN else baseN
     def legGate(cores: Int): Double = {
-      val v = times.filter(l => l.cores == cores && !l.early).map(_.sec)
-      val est = if (v.isEmpty) nClips * (if (cores == baseN) secPerClip2c else secPerClip8c)
-        else v.min
+      val v = times.filter(_.cores == cores).map(_.sec)
+      val est = if (v.isEmpty) plannedSec(cores) else v.min
       est * 1.2 + loadWait + 60 // JVM start + warmup + one bounded wait
     }
     var extraLegs = 0
     var futile = 0 // consecutive retries that did not improve the level's best CPU
-    while (times.forall(_.pinned) && !cpuAgree && extraLegs < maxExtraLegs && futile < 2 &&
+    while (!cpuAgree && extraLegs < maxExtraLegs && futile < 2 &&
         remaining > legGate(contestedLevel)) {
       System.err.println(f"[bench] best-leg CPU disagrees across levels " +
-        f"(${bestCpu(baseN, early = false)}%.0f vs ${bestCpu(4 * baseN, early = false)}%.0f core-s) — " +
+        f"(${bestCpu(baseN)}%.0f vs ${bestCpu(4 * baseN)}%.0f core-s) — " +
         f"extra leg at the contested level (${contestedLevel} cores)")
       extraLegs += 1
       extraPairs = (extraLegs + 1) / 2 // JSON continuity: retry effort in pair units
       val level = contestedLevel
-      val before = bestCpu(level, early = false)
-      once(level, inputDir, legLocalRoot, nClips, loadWait, fallback = Some(() => inProcessWarmed))
+      val before = bestCpu(level)
+      once(level)
       // two non-improving retries in a row ⇒ the disagreement is structural
       // (tiny-n job floor) or the storm is sustained — stop spending budget
-      if (bestCpu(level, early = false) >= 0.97 * before) futile += 1 else futile = 0
+      if (bestCpu(level) >= 0.97 * before) futile += 1 else futile = 0
     }
 
     graft.tools.Scratch.deleteRec(

@@ -56,18 +56,17 @@ object Checkpoints {
         // INCLUDING schema.
         val schemaPath = Paths.get(s"$root/_SCHEMA_$name.json")
         def readBack(): DataFrame = {
-          val df0 = spark.read.parquet(dir)
-          if (!Files.exists(schemaPath)) df0 // pre-r5 dir: widened, as before
-          else {
-            val js = new String(Files.readAllBytes(schemaPath), StandardCharsets.UTF_8)
-            graft.functions.SchemaAsserts.tightenArrays(df0,
-              org.apache.spark.sql.types.DataType.fromJson(js)
-                .asInstanceOf[org.apache.spark.sql.types.StructType])
-          }
+          val js = new String(Files.readAllBytes(schemaPath), StandardCharsets.UTF_8)
+          graft.functions.SchemaAsserts.tightenArrays(spark.read.parquet(dir),
+            org.apache.spark.sql.types.DataType.fromJson(js)
+              .asInstanceOf[org.apache.spark.sql.types.StructType])
         }
         if (Files.exists(manifestPath)) {
           val m = new String(Files.readAllBytes(manifestPath), StandardCharsets.UTF_8)
-          if (m.contains(s""""input_sig": "$inputSig"""")) {
+          // without its sidecar a stage can only be read back widened, and
+          // a recomputed downstream stage would then fail analysis on the
+          // nullable-element arrays: such a manifest is stale too
+          if (m.contains(s""""input_sig": "$inputSig"""") && Files.exists(schemaPath)) {
             return (readBack(), StageInfo(name, inputSig, -1L, 0L, resumed = true, Nil))
           }
           Files.delete(manifestPath) // stale: input changed → recompute

@@ -155,11 +155,9 @@ object Components {
       rotateBlocks(before)
       var labels = jump(minned0)
 
-      val verbose = sys.env.contains("GRAFT_CC_VERBOSE")
       var converged = false
       var iter = 0
       while (!converged && iter < maxIterations) {
-        val itT0 = System.nanoTime()
         before = persistedIds
         // min label over closed neighborhood
         val msgs = und
@@ -178,8 +176,6 @@ object Components {
         converged = nfp == fp
         fp = nfp
         iter += 1
-        if (verbose)
-          System.err.println(f"[cc] iter=$iter wall=${(System.nanoTime() - itT0) / 1e9}%.2fs converged=$converged")
       }
 
       // restore session-scale shuffle sizing before planning the

@@ -2,7 +2,7 @@ package graft.tools
 
 import graft.conf.GraftConf
 import graft.pipeline.DedupPipeline
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One pinned scaling leg of the bench, run as a CHILD JVM under
   * `taskset -c 0..N-1` (see [[graft.Bench]]).
@@ -18,18 +18,21 @@ import org.apache.spark.sql.SparkSession
   * size N" means; the JVM also sizes its GC/netty pools from the affinity
   * mask, so auxiliary parallelism scales with the leg too.
   *
-  * Protocol per leg: untimed warmup on a row-limited prefix (JIT +
+  * Protocol per leg: untimed warmup on a part-file subset (JIT +
   * whole-stage-codegen compilation of the same generated classes the timed
-  * run uses — a cold first run burns ~3x CPU, measured via ScaleProbe),
-  * then ONE timed full run. The parent interleaves (N, 4N) legs and takes
-  * best-of, so per-leg JVM cold-start stays out of the timed window.
+  * run uses — a cold first run burns ~3x CPU), then ONE timed full run.
+  * The parent interleaves (N, 4N) legs and takes best-of, so per-leg JVM
+  * cold-start stays out of the timed window.
   *
   * Shuffle partitions are FIXED (passed by the parent, same for both
   * levels): the job's plan — partition count included — is a property of
   * the job, not of the cluster size it runs on; giving the small leg fewer
   * partitions would compare two different physical plans.
   *
-  * Stdout: one machine-parseable line `GRAFT_LEG_SECONDS=<sec>`.
+  * Stdout: two machine-parseable lines, `GRAFT_LEG_SECONDS=<sec>` and
+  * `GRAFT_LEG_CPUSEC=<sec>`.
+  *
+  * [[session]] also builds graft.Bench's headline-query session.
   */
 object BenchLeg {
 
@@ -44,9 +47,7 @@ object BenchLeg {
     // path burns CPU *inside* the pinned mask (measured at 800k clips,
     // 8 pinned cores: 1534 core-s through /tmp vs 978 core-s through
     // tmpfs for the identical job). RAM-backed local dirs restore the
-    // storage model the two-cluster-size criterion assumes. (Env
-    // SPARK_LOCAL_DIRS, set by the parent, would also work; the explicit
-    // conf keeps the in-process fallback on the same protocol.)
+    // storage model the two-cluster-size criterion assumes.
     val s = sys.env.get("GRAFT_LEG_LOCAL_DIR")
       .fold(b)(d => b.config("spark.local.dir", d))
       .config("spark.sql.adaptive.enabled", "true")
@@ -60,11 +61,10 @@ object BenchLeg {
     s
   }
 
-  /** Wall seconds for one full dedup pipeline run over a pre-materialized
-    * parquet input table (the production shape: the input is a table on
-    * storage, not a re-synthesizable view). Count forces execution. */
-  def pipelineSecs(spark: SparkSession, inputDir: String): Double = {
-    val clips = spark.read.parquet(inputDir)
+  /** Wall seconds for one full dedup pipeline run over a parquet input
+    * table (the production shape: the input is a table on storage, not a
+    * re-synthesizable view). Count forces execution. */
+  private def pipelineSecs(spark: SparkSession, clips: DataFrame): Double = {
     val t0 = System.nanoTime()
     val res = DedupPipeline.run(spark, clips, GraftConf())
     res.clusters.count()
@@ -85,33 +85,6 @@ object BenchLeg {
       .map(_.getCollectionTime).sum
   }
 
-  /** Process CPU by OS-thread class, from /proc/self/task/N/stat — the only
-    * window onto JVM-internal threads (GC, JIT) that ThreadMXBean can't
-    * see. Dead threads' time is lost, but Spark's task/netty pools and the
-    * GC/compiler threads are long-lived. Diagnosis only. */
-  private def threadClassCpu(): Map[String, Double] = {
-    val hz = 100.0 // USER_HZ
-    val dir = new java.io.File("/proc/self/task")
-    val out = scala.collection.mutable.Map.empty[String, Double].withDefaultValue(0.0)
-    val files = Option(dir.listFiles()).getOrElse(Array.empty)
-    files.foreach { t =>
-      try {
-        val stat = new String(java.nio.file.Files.readAllBytes(t.toPath.resolve("stat")))
-        val comm = stat.substring(stat.indexOf('(') + 1, stat.lastIndexOf(')'))
-        val rest = stat.substring(stat.lastIndexOf(')') + 2).split(" ")
-        val cpu = (rest(11).toLong + rest(12).toLong) / hz // utime+stime
-        val cls =
-          if (comm.startsWith("GC Thread") || comm.startsWith("G1 ")) "gc"
-          else if (comm.startsWith("C1 ") || comm.startsWith("C2 ")) "jit"
-          else if (comm.startsWith("Executor task")) "task"
-          else if (comm.contains("shuffle") || comm.startsWith("netty")) "netty"
-          else "other"
-        out(cls) += cpu
-      } catch { case _: Throwable => () }
-    }
-    out.toMap
-  }
-
   def main(args: Array[String]): Unit = {
     val cores = args(0).toInt
     val inputDir = args(1)
@@ -130,22 +103,14 @@ object BenchLeg {
       val totalRows = spark.read.parquet(inputDir).count() // parquet-footer count, no scan
       val k = math.max(1, math.min(parts.length,
         math.ceil(parts.length.toDouble * warmupRows / math.max(1L, totalRows)).toInt))
-      val warm = spark.read.parquet(parts.take(k).map(_.getAbsolutePath): _*)
-      val res = DedupPipeline.run(spark, warm, GraftConf())
-      res.clusters.count()
-      res.cleanup()
+      pipelineSecs(spark, spark.read.parquet(parts.take(k).map(_.getAbsolutePath): _*))
     }
     val cpu0 = cpuNanos
     val gc0 = gcMillis
-    val tc0 = threadClassCpu()
-    val t = pipelineSecs(spark, inputDir)
-    // timed-segment resource accounting on stderr (diagnosis only; the
-    // parent parses just the stdout GRAFT_LEG_SECONDS line)
-    val tc = threadClassCpu().map { case (k, v) => k -> (v - tc0.getOrElse(k, 0.0)) }
-    val tcStr = tc.toSeq.sortBy(-_._2).map { case (k, v) => f"$k=$v%.0f" }.mkString(" ")
+    val t = pipelineSecs(spark, spark.read.parquet(inputDir))
     val cpuSec = (cpuNanos - cpu0) / 1e9
     System.err.println(
-      f"[leg] cores=$cores wall=$t%.1fs cpu=$cpuSec%.1fs gc=${(gcMillis - gc0) / 1e3}%.1fs [$tcStr]")
+      f"[leg] cores=$cores wall=$t%.1fs cpu=$cpuSec%.1fs gc=${(gcMillis - gc0) / 1e3}%.1fs")
     spark.stop()
     // stdout contract with the parent: wall + timed-segment process CPU
     // (the CPU line feeds the cross-level storm check — identical work

@@ -245,6 +245,13 @@ class PipelineSpec extends AnyFunSuite {
     assert(c2 === c1, "resumed run must be byte-identical")
     // earlier stages were resumed, not recomputed
     assert(r2.stages.count(_.resumed) === 4, r2.stages.map(s => (s.name, s.resumed)).toString)
+    // a manifest without its schema sidecar is stale: the stage is
+    // recomputed, never read back widened into a recomputed downstream stage
+    Seq("_SCHEMA_signatures.json", "_MANIFEST_verified.json", "_MANIFEST_clusters.json")
+      .foreach(f => java.nio.file.Files.delete(java.nio.file.Paths.get(s"$tmp/$f")))
+    val r2b = DedupPipeline.run(spark, df, ckptConf, inputSig = "t120")
+    assert(!r2b.stages.find(_.name == "signatures").get.resumed)
+    assert(r2b.clusters.as[(String, String)].collect().toMap === c1)
     // changed input signature invalidates resume
     val r3 = DedupPipeline.run(spark, df, ckptConf, inputSig = "t120-v2")
     assert(r3.stages.forall(!_.resumed))

@@ -17,19 +17,15 @@ class BenchReportSpec extends AnyFunSuite {
   private val mapper = new ObjectMapper()
   private def parse(s: String): JsonNode = mapper.readTree(s)
 
-  /** A leg per (cores, phase, rep) — more legs than any real run keeps
-    * (3 early incl. one retry + 3 main pairs + 4 parity-retry extras). */
+  /** The most legs a run can keep: 3 interleaved pairs + 4 parity-retry
+    * extras (GRAFT_BENCH_EXTRA_PAIRS=2 → up to 4 single legs). */
   private def legs(baseN: Int): Seq[BenchReport.Leg] = {
-    val early = Seq(
-      BenchReport.Leg(baseN, 113.475, 0.046, 211.18, pinned = true, 150000, early = true),
-      BenchReport.Leg(4 * baseN, 76.553, 0.039, 514.13, pinned = true, 150000, early = true),
-      BenchReport.Leg(4 * baseN, 39.066, 0.062, 249.76, pinned = true, 150000, early = true))
-    val main = (0 until 3).flatMap(i => Seq(
-      BenchReport.Leg(baseN, 361.036 + i, 0.039, 693.29 + i, pinned = true, 800000, early = false),
-      BenchReport.Leg(4 * baseN, 92.21 + i, 0.037, 693.02 + i, pinned = true, 800000, early = false)))
+    val pairs = (0 until 3).flatMap(i => Seq(
+      BenchReport.Leg(baseN, 361.036 + i, 0.039, 693.29 + i),
+      BenchReport.Leg(4 * baseN, 92.21 + i, 0.037, 693.02 + i)))
     val extras = (0 until 4).map(i =>
-      BenchReport.Leg(4 * baseN, 100.095 + i, 0.036, 745.64 + i, pinned = true, 800000, early = false))
-    early ++ main ++ extras
+      BenchReport.Leg(4 * baseN, 100.095 + i, 0.036, 745.64 + i))
+    pairs ++ extras
   }
 
   /** Maximum realistic protocol shape: all 13 headline queries, 10+ raw
@@ -45,13 +41,13 @@ class BenchReportSpec extends AnyFunSuite {
       java.nio.file.Paths.get("BENCH_FULL.json")), "UTF-8").trim
     BenchReport.State(
       queries = queries, errors = errors, legs = legs(2), baseN = 2,
-      mainClips = 800000, earlyClips = 150000, scalingSkipped = None,
+      mainClips = 800000, scalingSkipped = None,
       extraPairs = 2, heapPerCoreGb = 3, scratchKind = "tmpfs",
       sfDir = "/root/testdata/sf0.1",
       meta = BenchReport.Meta("2026-08-18T10:29:08.009476893Z", 3153.2, 5400.0,
         // longest protocol string Bench can emit (the GRAFT_INDEX_DIR
         // marker) so the budget is pinned at the true maximum shape
-        "parity-retry", 800000, 800000, 150000, 3, 3, "r5-compact+indexdir"),
+        "parity-retry", 800000, 800000, 3, 3, BenchReport.protocol(indexDir = true)),
       committedSource = Some("BENCH_FULL.json"), committedJson = Some(committed),
       partial = true)
   }
@@ -62,7 +58,9 @@ class BenchReportSpec extends AnyFunSuite {
       s"compact line ${line.length} chars > ${BenchReport.MaxCompactChars}")
     val node = parse(line)
     assert(node.get("dedup_scaling").get("scaling_efficiency").asDouble() > 0.9)
-    assert(node.get("meta").get("protocol").asText() == "r5-compact+indexdir")
+    assert(node.get("meta").get("protocol").asText() == "r6-compact+indexdir")
+    assert(node.get("meta").get("pairs_done").asInt() == 3)
+    assert(node.get("dedup_scaling").get("pinned").asBoolean())
     // full detail is referenced, not embedded
     assert(node.get("committed_full_run") == null)
     assert(node.get("committed_full_run_source").asText() == "BENCH_FULL.json")
@@ -95,32 +93,30 @@ class BenchReportSpec extends AnyFunSuite {
     assert(node.get("dedup_scaling").get("raw_runs").size() == st.legs.size)
     assert(node.get("committed_full_run").get("dedup_scaling")
       .get("scaling_efficiency").asDouble() == 0.979)
-    // early legs are tagged in raw_runs
-    val raw = node.get("dedup_scaling").get("raw_runs")
-    assert((0 until raw.size()).count(i => raw.get(i).has("early")) == 3)
   }
 
-  test("quotient and parity key on the early flag, not the input size") {
-    // budget resizing can shrink the main input to the early size: the
-    // early legs (weaker protocol) must STILL not merge into the main
-    // quotient (ADVICE r4 #1)
-    val mixed = Seq(
-      // early pair at 150k: fast-looking (would inflate efficiency to 1.0)
-      BenchReport.Leg(2, 100.0, 0.04, 200.0, pinned = true, 150000, early = true),
-      BenchReport.Leg(8, 25.0, 0.04, 200.0, pinned = true, 150000, early = true),
-      // main pair at the SAME size: the honest quotient (0.5)
-      BenchReport.Leg(2, 100.0, 0.04, 400.0, pinned = true, 150000, early = false),
-      BenchReport.Leg(8, 50.0, 0.04, 400.0, pinned = true, 150000, early = false))
-    val st = maxState().copy(legs = mixed, mainClips = 150000, earlyClips = 150000)
-    val full = parse(BenchReport.renderFull(st)).get("dedup_scaling")
-    assert(full.get("scaling_efficiency").asDouble() == 0.5)
-    assert(full.get("cpu_parity").asDouble() == 1.0) // 400/400, not 200/400
-    assert(!full.has("early"))
-    // and with NO main legs, the early quotient is used and labeled
-    val onlyEarly = parse(BenchReport.renderFull(st.copy(legs = mixed.take(2))))
-      .get("dedup_scaling")
-    assert(onlyEarly.get("early").asBoolean())
-    assert(onlyEarly.get("scaling_efficiency").asDouble() == 1.0)
+  test("protocol label: plain and +indexdir both render in the compact line") {
+    assert(BenchReport.protocol(indexDir = false) == "r6-compact")
+    assert(BenchReport.protocol(indexDir = true) == "r6-compact+indexdir")
+    Seq(false, true).foreach { indexDir =>
+      val st = maxState()
+      val label = BenchReport.protocol(indexDir)
+      val line = BenchReport.renderCompact(st.copy(meta = st.meta.copy(protocol = label)))
+      assert(line.length <= BenchReport.MaxCompactChars)
+      assert(parse(line).get("meta").get("protocol").asText() == label)
+    }
+  }
+
+  test("quotient and parity take the best leg per level across pairs and retries") {
+    val ls = Seq(
+      BenchReport.Leg(2, 110.0, 0.04, 420.0),
+      BenchReport.Leg(8, 60.0, 0.04, 600.0), // storm-inflated CPU
+      BenchReport.Leg(2, 100.0, 0.04, 400.0),
+      BenchReport.Leg(8, 50.0, 0.04, 440.0)) // parity retry
+    val sc = parse(BenchReport.renderFull(maxState().copy(legs = ls))).get("dedup_scaling")
+    assert(sc.get("scaling_efficiency").asDouble() == 0.5) // (100 / 50) / 4
+    assert(sc.get("cpu_parity").asDouble() == 1.1) // 440 / 400
+    assert(sc.get("raw_runs").size() == 4)
   }
 
   test("committedSummary extracts the three headline fields") {

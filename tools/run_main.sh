@@ -4,6 +4,7 @@
 # Env: SPARK_DRIVER_MEM (default 24g), plus whatever the main reads.
 set -e
 MAIN=$1; shift
+REPO="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          java.nio java.util java.util.concurrent java.util.concurrent.atomic; do
@@ -15,5 +16,5 @@ done
 exec java $ADD_OPENS \
   -Xmx"${SPARK_DRIVER_MEM:-24g}" \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "$REPO/target/scala-2.13/classes:/opt/spark/jars/*" \
   "$MAIN" "$@"
